@@ -20,10 +20,37 @@ Spark:
 - :mod:`sql2all_spark.streaming` — Structured Streaming slice over ``events``
 - :mod:`sql2all_spark.registry`  — name → (builder, oracle SQL) registry that
   backs ``__spark_entry__.py``
+
+Importing the package imports no pyspark: ``export`` and ``get_spark`` load
+on first use (PEP 562).  Spark's Python workers start as ``python -m
+sql2all_spark.pyworker``, which must run before pyspark is imported.
 """
 
-from sql2all_spark.export import export
-from sql2all_spark.session import get_spark
+import sys
+import types
 
 __all__ = ["get_spark", "export"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name == "export":
+        from sql2all_spark.export import export as value
+    elif name == "get_spark":
+        from sql2all_spark.session import get_spark as value
+    else:
+        raise AttributeError(f"module {__name__!r} has no attribute {name!r}")
+    globals()[name] = value
+    return value
+
+
+class _Package(types.ModuleType):
+    def __setattr__(self, name: str, value) -> None:
+        # The import system binds each loaded submodule on its package; keep
+        # ``sql2all_spark.export`` the function, not the same-named module.
+        if name == "export" and isinstance(value, types.ModuleType):
+            value = value.export
+        super().__setattr__(name, value)
+
+
+sys.modules[__name__].__class__ = _Package

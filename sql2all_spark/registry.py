@@ -183,10 +183,7 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
 
 def _load_all() -> None:
     for mod in _QUERY_MODULES:
-        try:
-            importlib.import_module(mod)
-        except ModuleNotFoundError:
-            pass  # module not built yet (incremental rounds)
+        importlib.import_module(mod)
 
 
 def all_specs() -> dict[str, QuerySpec]:

@@ -10,6 +10,18 @@ config here is chosen to also hold on a large multi-executor cluster:
 - Arrow enabled for every pandas-UDF exchange (the only Python hot paths we
   allow are Arrow-batched).
 - Session timezone pinned UTC so timestamp semantics match the DuckDB oracle.
+- Local masters start Spark's Python worker daemon through
+  :mod:`sql2all_spark.pyworker` (``spark.python.daemon.module``).  Spark puts
+  ``pyspark.zip``, the py4j zip and the ``spark-core`` jar on each worker's
+  ``sys.path``, and pyspark calls ``importlib.invalidate_caches()`` before
+  every task, which makes Python 3.11 re-read each archive's whole
+  directory: 0.1-0.2 s per task on a 4-core host, even in a reused worker.
+  When the installed pyspark (same ``pyspark/version.py``) and py4j are on
+  the path as directories, the daemon drops those archives and runs the
+  installed copy; otherwise it keeps Spark's path.  A cluster, or a session
+  from :func:`configure_existing`, keeps Spark's own daemon: there the
+  package may reach executors only through ``--py-files``, which arrive
+  after the daemon has started.
 """
 
 from __future__ import annotations
@@ -162,6 +174,8 @@ def get_spark(
     local_dir = _default_local_dir(resolved_master)
     if local_dir:
         confs["spark.local.dir"] = local_dir
+    if resolved_master == "local" or resolved_master.startswith("local["):
+        confs["spark.python.daemon.module"] = "sql2all_spark.pyworker"
     confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions or 2 * cpus)
     confs.update(extra_confs or {})
     for k, v in confs.items():

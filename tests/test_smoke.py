@@ -23,6 +23,20 @@ def test_every_query_has_registry_entry(spark):
     assert len(qs) >= 6
 
 
+def test_registry_raises_on_missing_module(monkeypatch):
+    """A query module that fails to import fails the registry loudly
+    instead of silently dropping its queries."""
+    import pytest
+
+    from sql2all_spark import registry
+
+    monkeypatch.setattr(
+        registry, "_QUERY_MODULES", ["sql2all_spark.operators.no_such_module"]
+    )
+    with pytest.raises(ModuleNotFoundError):
+        registry.all_specs()
+
+
 def test_events_ts_session_timezone_independent(spark, sf_dir):
     """ADVICE r5: to_utc_timestamp on an NTZ column silently shifted the
     instant with the session timezone.  The field-arithmetic normalization
